@@ -63,12 +63,20 @@ object Checkpoint {
       .as[Doc]
   }
 
-  private def ckptOrEmpty(spark: SparkSession, table: String): DataFrame =
-    try readTable(spark, table)
-    catch { case _: Throwable =>
-      import spark.implicits._
-      spark.emptyDataset[CheckpointRow].toDF()
-    }
+  /** The checkpoint table, or an empty one while it holds no committed
+    * data: the directory is absent, or has only hidden entries (a crash
+    * during the first append leaves just `_temporary`). Any other read
+    * failure — a corrupt part file — propagates: reading it as "no
+    * progress" would silently recompute and re-append every bucket.
+    */
+  private def ckptOrEmpty(spark: SparkSession, table: String): DataFrame = {
+    import spark.implicits._
+    val path = new org.apache.hadoop.fs.Path(table)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData = fs.exists(path) &&
+      fs.listStatus(path).map(_.getPath.getName).exists(n => !n.startsWith("_") && !n.startsWith("."))
+    if (hasData) readTable(spark, table) else spark.emptyDataset[CheckpointRow].toDF()
+  }
 
   private def okBuckets(ckpt: DataFrame, runId: String, stage: String): Set[Int] =
     ckpt.filter(col("run_id") === runId && col("stage") === stage &&

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Ngrams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,9 +55,14 @@ object Curation {
     funnelOver(spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("source"), col("text")))
 
+  /** Eval-set size for the decontamination gate (q_contamination's
+    * in-corpus rule: the first BenchN docs ARE the benchmark, so the
+    * gate provably drops them at overlap 1.0). */
+  val BenchN = 25
+
   /** The annotated per-doc frame: every per-row curation signal (raw
-    * token count, both gate decisions, the PII-redacted text and its
-    * token count) over one scan subtree.
+    * token count, the three gate decisions, the PII-redacted text's
+    * token array and count) over one scan subtree.
     *
     * TOKENIZE ONCE into a shared column: inlining a tokenizer copy
     * into every feature (lang hits x5, quality f1-f5, n_raw) blows
@@ -70,11 +76,6 @@ object Curation {
     * projection regardless of input file layout — the fixture table
     * is ONE parquet partition.
     */
-  /** Eval-set size for the decontamination gate (q_contamination's
-    * in-corpus rule: the first BenchN docs ARE the benchmark, so the
-    * gate provably drops them at overlap 1.0). */
-  val BenchN = 25
-
   private[graft] def annotated(raw: DataFrame): DataFrame = {
     // LAZY localCheckpoint on the tokenized frame: the per-row gate
     // projection and the decontamination aggregate are separate
@@ -87,38 +88,29 @@ object Curation {
       .localCheckpoint(false)
     val (nTok, _, score) =
       TextAnalysis.learnedFeaturesOver(col("text"), col("__toks"))
-    // the scrubbed text is tokenized ONCE here and the array carried in
-    // the frame (round 6): n_s, the funnel's span-scrub window pass and
-    // its text rebuild all read __toks_s — before, each re-tokenized
-    // t_s from scratch (three regex-split passes over the survivors)
+    // the scrubbed text is tokenized ONCE here and only the array is
+    // carried (round 6): n_s, the funnel's span-scrub window pass and
+    // its text rebuild all read __toks_s; the redacted string itself
+    // has no later reader, so it never rides the funnel's checkpoint
     val perRow = toked.select(
         col("doc_id"), col("source"), nTok.as("n_raw"),
         (TextAnalysis.langIdOver(col("__toks")) === "en").as("lang_ok"),
         (score > 0).as("qual_ok"),
-        TextAnalysis.piiScrubbed(col("text")).as("t_s"))
-      .withColumn("__toks_s", TextAnalysis.toks(col("t_s")))
+        TextAnalysis.toks(TextAnalysis.piiScrubbed(col("text"))).as("__toks_s"))
       .withColumn("n_s", size(col("__toks_s")))
     // DECONTAMINATION gate: per-doc distinct-trigram overlap against
     // the broadcast eval-set shingles (contaminationOver — one corpus
     // shingle pass, nothing quadratic). Integer-exact rule — a doc is
     // clean iff 2*n_overlap < n_trigrams (no float rounding at the
     // threshold, identical in DuckDB).
-    // Round 6: the shingles are 64-bit HASH trigrams (xxhash64 over 3
-    // consecutive per-token hashes — the windowKeys trick) instead of
-    // built strings: token sequences map 1:1 to the old trigram
-    // strings, so distinct counts and the overlap join are value-
-    // identical up to 64-bit collisions, and the corpus-side explode
-    // carries longs, not strings. __th gets its own projection —
-    // Catalyst does not CSE inside lambda bodies.
-    val triHashes = when(size(col("__th")) >= 3,
-        transform(sequence(lit(1), size(col("__th")) - 2), i =>
-          xxhash64(element_at(col("__th"), i), element_at(col("__th"), i + 1),
-            element_at(col("__th"), i + 2))))
-      .otherwise(array().cast("array<bigint>"))
+    // Round 6: the shingles are 64-bit HASH trigrams (Ngrams.keys)
+    // instead of built strings: distinct counts and the overlap join
+    // are value-identical up to 64-bit collisions, and the corpus-side
+    // explode carries longs, not strings.
     val decon = TextAnalysis.contaminationOver(
         toked.select(col("doc_id"), col("__toks"))
-          .withColumn("__th", transform(col("__toks"), t => xxhash64(t)))
-          .select(col("doc_id"), array_distinct(triHashes).as("tris")),
+          .withColumn("__th", Ngrams.tokenHashes(col("__toks")))
+          .select(col("doc_id"), array_distinct(Ngrams.keys(col("__th"), 3)).as("tris")),
         BenchN)
       .select(col("doc_id"),
         (col("n_trigrams") === 0 ||

@@ -439,12 +439,14 @@ object Dedup {
       }
       def labelSum(df: DataFrame): java.math.BigDecimal =
         df.agg(sum(col("label").cast("decimal(38,0)"))).first().getDecimal(0)
-      // prevSum starts UNKNOWN (null): the old initial labelSum ran a
-      // whole extra job before round 1 only to seed the comparison —
-      // letting round 1 never declare convergence costs at most one
-      // cheap extra round in the already-converged-resume corner case
-      // and saves one action from every normal run (round 6).
-      var prevSum: java.math.BigDecimal = null
+      // prevSum on a fresh start is UNKNOWN (null): seeding it would run
+      // a whole extra job before round 1 in every normal run, to save
+      // at most one cheap round (round 6). A resume seeds it from the
+      // adopted snapshot, so a crash right after committing an already-
+      // converged round converges in the first resumed round instead
+      // of committing one more snapshot.
+      var prevSum: java.math.BigDecimal =
+        if (numericIds && resumed.isDefined) labelSum(labels) else null
       var converged = false
       while (!converged && it < maxIter) {
         // LAZY checkpoint: the convergence probe below is the round's
@@ -481,9 +483,6 @@ object Dedup {
         }
         it += 1
       }
-      // optimization-round diagnostics only (off unless the env is set)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] converged=$converged after $it rounds")
       val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, Seq("label"))
         .select(col("node").as("doc_id"), col("label").as("cluster_rep"),

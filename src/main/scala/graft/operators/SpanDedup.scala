@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Ngrams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,17 +88,12 @@ object SpanDedup {
     * One scan, one explode; h = xxhash64(ngram) is the join/shuffle key
     * so the window strings never ride a shuffle in the scrub path.
     */
-  def windows(docs: DataFrame, w: Int = W): DataFrame = {
-    val t = toks(col("text"))
-    val wins = when(size(col("__toks")) >= w,
-        transform(sequence(lit(1), size(col("__toks")) - (w - 1)),
-          s => concat_ws(" ", slice(col("__toks"), s, lit(w)))))
-      .otherwise(array().cast("array<string>"))
-    docs.withColumn("__toks", t)
-      .select(col("doc_id"), posexplode(wins).as(Seq("__p", "ngram")))
+  def windows(docs: DataFrame, w: Int = W): DataFrame =
+    docs.withColumn("__toks", toks(col("text")))
+      .select(col("doc_id"),
+        posexplode(Ngrams.strings(col("__toks"), w)).as(Seq("__p", "ngram")))
       .select(col("doc_id"), (col("__p") + 1).as("start"), col("ngram"),
         xxhash64(col("ngram")).as("h"))
-  }
 
   /** Window hashes appearing in ≥2 distinct docs — the duplicate-
     * passage key set. Plain hash groupBy; output is tiny vs the corpus.
@@ -143,27 +139,20 @@ object SpanDedup {
         col("ngram"), col("h"))
 
   /** (doc_id, start, h) window keys WITHOUT materializing the window
-    * strings (round 6, scrub path only): each token is xxhash64'd once
-    * into __th (its own projection — Catalyst has no CSE inside lambda
-    * bodies, an inlined reference would re-hash the whole doc per
-    * window), then each window key is xxhash64 over its w consecutive
-    * token hashes. Token sequences map 1:1 to the old ngram strings
-    * (tokens never contain the join character), so the h-equality
-    * classes are identical up to 64-bit collisions — the same guarantee
-    * the string hash gave, at none of the per-window slice+concat
-    * allocation. The committed-index path keeps `windows` (the table
-    * stores the ngram strings; its h stays xxhash64(ngram)).
+    * strings (round 6, scrub path only): `Ngrams.keys` over the token
+    * hashes, projected into __th first (see Ngrams — no CSE inside
+    * lambda bodies). The h-equality classes are those of the ngram
+    * strings up to 64-bit collisions — the same guarantee the string
+    * hash gave, at none of the per-window string allocation. The
+    * committed-index path keeps `windows` (the table stores the ngram
+    * strings; its h stays xxhash64(ngram)).
     */
-  private[operators] def windowKeysToked(toked: DataFrame, w: Int = W): DataFrame = {
-    val winHashes = when(size(col("__th")) >= w,
-        transform(sequence(lit(1), size(col("__th")) - (w - 1)), s =>
-          xxhash64((0 until w).map(k => element_at(col("__th"), s + k)): _*)))
-      .otherwise(array().cast("array<bigint>"))
+  private[operators] def windowKeysToked(toked: DataFrame, w: Int = W): DataFrame =
     toked
-      .withColumn("__th", transform(col("__toks"), t => xxhash64(t)))
-      .select(col("doc_id"), posexplode(winHashes).as(Seq("__p", "h")))
+      .withColumn("__th", Ngrams.tokenHashes(col("__toks")))
+      .select(col("doc_id"),
+        posexplode(Ngrams.keys(col("__th"), w)).as(Seq("__p", "h")))
       .select(col("doc_id"), (col("__p") + 1).as("start"), col("h"))
-  }
 
   /** Per-doc duplicate-passage metrics + the scrubbed text: tokens at
     * positions covered by ANY duplicated window are removed; clean_md5

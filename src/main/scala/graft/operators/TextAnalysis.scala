@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Ngrams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -112,7 +113,7 @@ object TextAnalysis {
   private[graft] def learnedFeaturesOver(text: Column, tokens: Column): (Column, Column, Column) = {
     val w = graft.ml.QualityModel.default
     val nTok = size(tokens)
-    val tris = triWindows(tokens)
+    val tris = Ngrams.strings(tokens, 3)
     val f1 = least(nTok.cast("double"), lit(200.0)) / 200.0
     val f2 = when(nTok === 0, 0.0)
       .otherwise(aggregate(tokens, lit(0L), (a, t) => a + length(t))
@@ -150,7 +151,7 @@ object TextAnalysis {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val tokens = toks($"text")
     val nTok = size(tokens)
-    val trigrams = triWindows(tokens)
+    val trigrams = Ngrams.strings(tokens, 3)
     docs.select($"doc_id", nTok.as("n_tokens"), tokens.as("toks"),
         trigrams.as("tris"),
         round(when(length($"text") === 0, 0.0)
@@ -166,22 +167,6 @@ object TextAnalysis {
         $"alpha_ratio")
   }
 
-  /** Trigram windows of a token array (1-based; guarded — sequence()
-    * DESCENDS when stop < start). Shared by repetition + contamination.
-    */
-  private[graft] def triWindows(tokens: Column): Column = {
-    val n = size(tokens)
-    when(n >= 3,
-      transform(sequence(lit(1), n - 2), i =>
-        concat_ws(" ", element_at(tokens, i), element_at(tokens, i + 1),
-          element_at(tokens, i + 2))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Distinct trigram-shingle array of a text column. */
-  private def triShingles(text: Column): Column =
-    array_distinct(triWindows(toks(text)))
-
   /** BENCHMARK CONTAMINATION check (decontamination): per-doc fraction
     * of distinct trigram shingles that appear in an evaluation set's
     * shingle table — the filter that keeps eval data out of a training
@@ -195,7 +180,8 @@ object TextAnalysis {
   def contamination(spark: SparkSession, sfDir: String, benchN: Int): DataFrame =
     contaminationOver(
       spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), triShingles(col("text")).as("tris")),
+        .select(col("doc_id"),
+          array_distinct(Ngrams.strings(toks(col("text")), 3)).as("tris")),
       benchN)
 
   /** The overlap stage over an explicit (doc_id, tris) shingle frame —

@@ -193,6 +193,28 @@ class CheckpointSpec extends SparkSuite {
     assert(e.getMessage.contains("run1-triples"), e.getMessage)
   }
 
+  test("checkpoint table with no committed data is no progress; a corrupt one throws") {
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_read").toString
+    val docs = Corpus.fixtureCorpus(spark, 20)
+    // a crash during the first append leaves only _temporary behind
+    val ckpt = java.nio.file.Paths.get(dir, "ckpt")
+    java.nio.file.Files.createDirectories(ckpt.resolve("_temporary").resolve("0"))
+    Checkpoint.runStage(docs, ckpt.toString, "run1", "triples", 4,
+      s"$dir/out1")(d => Pipeline.textPath(d))
+    assert(Checkpoint.readTable(spark, ckpt.toString)
+      .select("partition_id").distinct().count() === 4)
+    // a corrupt part file is a read failure, never "nothing done yet"
+    val bad = java.nio.file.Paths.get(dir, "bad_ckpt")
+    java.nio.file.Files.createDirectories(bad)
+    java.nio.file.Files.write(bad.resolve("part-00000-corrupt.snappy.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception] {
+      Checkpoint.runStage(docs, bad.toString, "run1", "triples", 4,
+        s"$dir/out2")(d => Pipeline.textPath(d))
+    }
+    assert(TableIO.manifest(s"$dir/out2").isEmpty, "stage ran over a corrupt checkpoint")
+  }
+
   test("TableIO manifest commit + read-back") {
     val dir = java.nio.file.Files.createTempDirectory("tio").toString
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")

@@ -172,6 +172,25 @@ class DedupSpec extends SparkSuite {
     assert(err.getMessage.contains("one state table per collapse run"))
   }
 
+  test("clusters resume from an already-converged committed round commits nothing more") {
+    // the path 1-2-3 reaches its fixpoint in round 0 (propagate + jump),
+    // but round 0 cannot know it and commits; the crash follows that
+    // commit. The resume must see the snapshot's labels unchanged in its
+    // first round and stop there — no further cc-round-* snapshot.
+    import graft.sources.TableIO
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    val table = java.nio.file.Files.createTempDirectory("cc-conv").toString + "/labels"
+    intercept[IllegalStateException] {
+      Dedup.clustersImpl(pairs, 30, Some(table), 1, "cc", crashAfterRound = 0)
+    }
+    assert(TableIO.snapshotIds(table) === Seq("cc-round-0"))
+    val resumed = Dedup.clusters(pairs, stateTable = Some(table), commitEvery = 1,
+        runId = "cc")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(resumed === Seq((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L)))
+    assert(TableIO.snapshotIds(table) === Seq("cc-round-0"))
+  }
+
   test("verify gate: borderline est-only candidate no longer merges clusters") {
     // two genuine dup pairs (A,B) and (C,D) plus a BRIDGE candidate
     // (B,C) whose estimated similarity clears the threshold but whose

@@ -7,7 +7,8 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 JAR=target/scala-2.13/strephitspark_2.13-0.1.0.jar
-[ -f "$JAR" ] || sbt -batch package
+# always rebuild: a jar left from an earlier checkout would measure old code
+sbt -batch package
 SUBMIT=/opt/spark/bin/spark-submit
 run() { # nExec coresPerExec mode
   SPARK_GRAFT_SCALE_REPL="${SPARK_GRAFT_SCALE_REPL:-100}" \
