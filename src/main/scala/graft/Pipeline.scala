@@ -93,15 +93,10 @@ object Pipeline {
     import spark.implicits._
     val outTable = rejectedCache.computeIfAbsent(
       (spark.sparkContext.applicationId, sfDir), { _ =>
-        // the sanitizer is lossy ('/a/b-c' and '/a/b_c' collide), so a
-        // raw-dir hash makes the path collision-proof — without it two
-        // distinct inputs would share runStage's snapId and one would
-        // silently adopt the other's committed classify output
-        // (round-4 advisor)
+        // a collision-proof path: two distinct inputs sharing runStage's
+        // snapId would silently adopt each other's committed classify output
         val base = s"${sys.props("java.io.tmpdir")}/graft_rejected_" +
-          s"${sfDir}_${spark.sparkContext.applicationId}"
-            .replaceAll("[^a-zA-Z0-9.]", "_") +
-          "_" + java.lang.Long.toHexString(graft.util.Det.hashStr(sfDir))
+          graft.util.Det.scratchTag(sfDir, spark.sparkContext.applicationId)
         val docs = docsFor(spark, sfDir)
         val bc = spark.sparkContext.broadcast(Classification.defaultModel)
         Checkpoint.runStage(docs, s"$base/ckpt", "rejected", "classify_full",

@@ -45,11 +45,8 @@ object SparkEntry {
 
   private def dedupIndexTable(s: SparkSession, dir: String): String =
     dedupIndexCache.computeIfAbsent((s.sparkContext.applicationId, dir), { case (_, d) =>
-      // raw-dir hash suffix: the sanitizer is lossy, distinct input
-      // dirs must never share a committed index path (round-4 advisor)
       val table = s"${sys.props("java.io.tmpdir")}/graft_dedup_idx_" +
-        s"${d}_${s.sparkContext.applicationId}".replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_" + java.lang.Long.toHexString(graft.util.Det.hashStr(d))
+        graft.util.Det.scratchTag(d, s.sparkContext.applicationId)
       val corpus = operators.Dedup
         .withPlantedDups(s.read.parquet(s"$d/documents.parquet"), 20)
         .filter(col("doc_id") < 480)
@@ -69,8 +66,7 @@ object SparkEntry {
   private def spanIndexTable(s: SparkSession, dir: String): String =
     spanIndexCache.computeIfAbsent((s.sparkContext.applicationId, dir), { case (_, d) =>
       val table = s"${sys.props("java.io.tmpdir")}/graft_span_idx_" +
-        s"${d}_${s.sparkContext.applicationId}".replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_" + java.lang.Long.toHexString(graft.util.Det.hashStr(d))
+        graft.util.Det.scratchTag(d, s.sparkContext.applicationId)
       val docs = operators.SpanDedup.withPlantedPassages(
         s.read.parquet(s"$d/documents.parquet"))
       operators.SpanDedup.writeWindows(docs.filter(col("doc_id") < 480), table)
@@ -513,8 +509,7 @@ object SparkEntry {
       // per-session path: expireOrphans below must never see (and
       // delete) a CONCURRENT session's in-flight snapshot directory
       val table = s"${sys.props("java.io.tmpdir")}/graft_sink_" +
-        s"${dir}_${s.sparkContext.applicationId}".replaceAll("[^a-zA-Z0-9.]", "_") +
-        "_" + java.lang.Long.toHexString(graft.util.Det.hashStr(dir))
+        graft.util.Det.scratchTag(dir, s.sparkContext.applicationId)
       TableIO.write(flat, table, partitionBy = Seq("pred_bucket"), snapshotId = "verify")
       TableIO.expireOrphans(table) // drop generations the Overwrite unreferenced
       TableIO.read(s, table)

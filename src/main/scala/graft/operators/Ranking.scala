@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * PopularityRanking). All partial+final hash aggregations; DuckDB
   * oracles exist for every op here (SparkEntry.oracleSql).
   *
-  * Inputs are (doc_id, tok) term tables produced by `terms`.
+  * The ranking ops take a (doc_id, tok, tf) frame: `tfFromDocs`, or
+  * its exploded reference form `tf(terms(...))`.
   */
 object Ranking {
 
@@ -38,7 +39,6 @@ object Ranking {
     */
   def tfFromDocs(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val toks = filter(split(lower($"text"), "[^a-z]+"), t => t =!= "")
     // Each derived array gets ITS OWN projection so downstream lambdas
     // reference an attribute, not the producing expression: Catalyst
     // has no common-subexpression elimination inside lambda bodies, so
@@ -47,7 +47,7 @@ object Ranking {
     // shuffle it replaces). sort_array, not array_sort: the latter
     // expands to an interpreted per-comparison lambda.
     spark.read.parquet(s"$sfDir/documents.parquet")
-      .select($"doc_id", sort_array(toks).as("__s"))
+      .select($"doc_id", sort_array(TextAnalysis.toks($"text")).as("__s"))
       .select($"doc_id", $"__s", runStarts($"__s").as("__st"))
       .select($"doc_id", explode(tfEntries($"__s", $"__st")).as("e"))
       .select($"doc_id", $"e.tok".as("tok"), $"e.tf".as("tf"))
@@ -78,23 +78,17 @@ object Ranking {
           .cast("long").as("tf"))))
       .otherwise(array().cast("array<struct<tok:string,tf:bigint>>"))
 
-  /** Document frequency + IDF per token. `n` = corpus size. */
-  def dfIdf(terms: DataFrame, n: Long): DataFrame =
-    dfIdfOverTf(tf(terms), n)
-
-  /** df/idf from a (doc_id, tok, tf) frame: its rows are unique per
-    * (doc, tok), so df per tok = count(*) — countDistinct(doc_id) over
-    * re-exploded terms computed the identical value through a far
-    * bigger shuffle (distinct expansion of the whole term table).
+  /** Document frequency + IDF per token (`n` = corpus size). The
+    * tf frame's rows are unique per (doc, tok), so df per tok =
+    * count(*) — countDistinct(doc_id) over re-exploded terms computed
+    * the identical value through a far bigger shuffle (distinct
+    * expansion of the whole term table).
     */
   def dfIdfOverTf(tfFrame: DataFrame, n: Long): DataFrame =
     tfFrame.groupBy("tok").agg(count(lit(1)).as("df"))
       .withColumn("idf", round(log(lit(n.toDouble) / col("df")), 6))
 
   /** avg + stddev of tf-idf per token across docs. */
-  def tfidfStats(terms: DataFrame, n: Long): DataFrame =
-    tfidfStatsOverTf(tf(terms), n)
-
   def tfidfStatsOverTf(tfFrame: DataFrame, n: Long): DataFrame = {
     // the idf side derives from the SAME tf frame (df = count(*), rows
     // unique per (doc, tok)) instead of re-exploding the corpus; the
@@ -110,9 +104,6 @@ object Ranking {
   }
 
   /** Popularity = fraction of docs containing the token. */
-  def popularity(terms: DataFrame, n: Long): DataFrame =
-    popularityOverTf(tf(terms), n)
-
   def popularityOverTf(tfFrame: DataFrame, n: Long): DataFrame =
     tfFrame.groupBy("tok").agg(count(lit(1)).as("df"))
       .withColumn("popularity", round(col("df") / lit(n.toDouble), 6))
@@ -121,9 +112,6 @@ object Ranking {
     * mean of min-max-scaled avg tf-idf and popularity; top `k`,
     * deterministic tie-break on token.
     */
-  def luRank(terms: DataFrame, n: Long, k: Int): DataFrame =
-    luRankOverTf(tf(terms), n, k)
-
   def luRankOverTf(t: DataFrame, n: Long, k: Int): DataFrame = {
     // Single-scan shape (round-1 VERDICT perf #3): tf rows are unique
     // per (doc, tok), so df = count(*) per tok from the SAME aggregate

@@ -54,7 +54,7 @@ object Relational {
     // table overwrite (advisor finding, round 2). In production the
     // bucketed layout is a real committed table paid once at ingest;
     // here it is a per-session scratch build.
-    val tag = s"${dir}_${s.sparkContext.applicationId}".replaceAll("[^a-zA-Z0-9]", "_")
+    val tag = graft.util.Det.scratchTag(dir, s.sparkContext.applicationId)
     val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed_$tag"
     def ensure(name: String, df: DataFrame, key: String): String = {
       val tbl = s"${name}_$tag"

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.Pipeline
 import graft.model._
-import graft.operators.{Classification, Extraction, Linking, Serialize}
+import graft.operators.Serialize
 import graft.sources.Corpus
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,11 +49,7 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Doc], _: Long) =>
-        val sents = Extraction.sentences(batch)
-        val lus = Extraction.matchN2n(sents)
-        val bc = batch.sparkSession.sparkContext.broadcast(Classification.defaultModel)
-        val cls = Classification.classify(lus, bc)
-        val triples = Serialize.textTriples(cls)
+        val triples = Pipeline.textPath(batch)
         Serialize.unionDedup(triples, triples.limit(0))
           .write.mode("append").parquet(outDir)
         ()

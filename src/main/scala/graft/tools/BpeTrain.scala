@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Bench
+import graft.operators.TextAnalysis
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Learns the frozen BPE merge table from the fixture corpus and
@@ -22,15 +23,9 @@ object BpeTrain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("8")
     val freqs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(explode(filter(split(lower(col("text")), "[^a-z]+"),
-        w => w =!= "")).as("w"))
+      .select(explode(TextAnalysis.toks(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
       .orderBy(col("w")) // deterministic input order for the learner
       .collect()

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Pipeline
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, Pipeline}
 
 /** Dev tool: dump the formatted physical plan of the flagship pipeline
   * (plan-inspection protocol, BASELINE.md: no Collect/cartesian nodes;
@@ -10,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("8")
     val keys: Seq[String] =
       if (args.length > 1) args.drop(1).toSeq else Seq("pipe_triples")
     keys.foreach { k0 =>

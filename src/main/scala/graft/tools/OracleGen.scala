@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Generates literal-VALUES DuckDB oracles for the deterministic
@@ -72,13 +71,7 @@ object OracleGen {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outDir = Paths.get("src/main/resources/oracles")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session("8")
     keys.foreach { k =>
       val df = graft.SparkEntry.queries(k)(spark, sfDir)
       val schema = df.schema

@@ -3,14 +3,16 @@ package graft.tools
 import graft.{Bench, Pipeline}
 import graft.operators.Serialize
 import graft.sources.Corpus
+import graft.util.Det
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum, xxhash64}
 
-/** Two-parallelism scaling study — the sandbox substitute for the
-  * north rule's N vs 4N executors (BASELINE.md): run the identical
-  * pipeline input at local[8] and local[32] in one JVM (stop + new
-  * session), report docs/sec at both and the scaling efficiency
-  * tp(32c) / (4 x tp(8c)), and assert the triple sets are identical.
+/** One cluster size of the scaling protocol (BASELINE.md: N vs 4N
+  * executors; `tools/run_scaling.sh` submits it at 1×2 and 4×2): time
+  * the flagship pipeline on real executor JVMs, then checksum its
+  * output in the same session, and print one `cluster_level` JSON line.
+  *
+  *   spark-submit --class graft.tools.Scaling <jar> <nExec> <coresPerExec>
   *
   * The input is the sf0.1 spans table replicated REPL-fold so each
   * core has real work (fixed per-job overheads otherwise dominate a
@@ -19,7 +21,8 @@ import org.apache.spark.sql.functions.col
 object Scaling {
 
   val Repl = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPL", "100").toInt
-  val Reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "5").toInt
+  /** Timed reps after one warm-up run; the level's time is their min. */
+  val Reps = 4
 
   /** Materialize the replicated spans table ONCE as parquet — the
     * measured job then reads the table like a production run reads the
@@ -28,7 +31,7 @@ object Scaling {
     * bound) instead of the engine.
     */
   def ensureSpansTable(sfDir: String): String = {
-    val dir = s"/tmp/graft-scaling-spans-r$Repl-${sfDir.replaceAll("[^a-z0-9.]", "_")}"
+    val dir = s"/tmp/graft_scaling_spans_${Det.scratchTag(sfDir, s"r$Repl")}"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))) {
       val spark = Bench.session("32")
       Corpus.spansTableReplicated(spark, sfDir, Repl)
@@ -66,133 +69,32 @@ object Scaling {
     s
   }
 
-  private def runCluster(nExec: Int, coresPerExec: Int, sfDir: String): (Double, Long, Long) = {
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val Array(nExec, coresPerExec) = args.map(_.toInt)
     val spansDir = ensureSpansTable(sfDir)
     val spark = clusterSession(nExec, coresPerExec)
     import spark.implicits._
     val docs = spark.read.parquet(spansDir).as[graft.model.Doc]
-    val text = Pipeline.textPath(docs)
-    val semi = Serialize.semiTriples(Corpus.semiDocs(spark, sfDir))
-    var nTriples = 0L
-    def job() = { nTriples = Serialize.unionDedup(text, semi).count() }
+    val triples = Serialize.unionDedup(Pipeline.textPath(docs),
+      Serialize.semiTriples(Corpus.semiDocs(spark, sfDir)))
     val nDocs = docs.count()
-    job() // warm-up
-    val reps = (1 to Reps).map { _ =>
-      val s = Bench.time(job())
-      System.err.println(f"[scaling] exec=$nExec x$coresPerExec rep=$s%.3f s")
-      s
-    }
-    spark.stop()
-    (reps.min, nDocs, nTriples)
-  }
-
-  private def runAt(cpus: Int, sfDir: String): (Double, Long, Long) = {
-    val spansDir = ensureSpansTable(sfDir)
-    val spark = Bench.session(cpus.toString)
-    import spark.implicits._
-    val docs = spark.read.parquet(spansDir).as[graft.model.Doc]
-    val text = Pipeline.textPath(docs)
-    val semi = Serialize.semiTriples(Corpus.semiDocs(spark, sfDir))
     var nTriples = 0L
-    def job() = { nTriples = Serialize.unionDedup(text, semi).count() }
-    val nDocs = docs.count()
+    def job() = { nTriples = triples.count() }
     job() // warm-up
     // min over reps: noisy shared host + progressive JIT; min is the
     // noise-free estimator (both levels measured identically)
-    val reps = (1 to Reps).map { _ =>
+    val sec = (1 to Reps).map { _ =>
       val s = Bench.time(job())
-      System.err.println(f"[scaling] cpus=$cpus rep=$s%.3f s")
+      System.err.println(f"[scaling] exec=$nExec x$coresPerExec rep=$s%.3f s")
       s
-    }
-    spark.stop()
-    (reps.min, nDocs, nTriples)
-  }
-
-  private def clusterChecksum(nExec: Int, coresPerExec: Int, sfDir: String): BigDecimal = {
-    val spansDir = ensureSpansTable(sfDir)
-    val spark = clusterSession(nExec, coresPerExec)
-    import spark.implicits._
-    val docs = spark.read.parquet(spansDir).as[graft.model.Doc]
-    val text = Pipeline.textPath(docs)
-    val semi = Serialize.semiTriples(Corpus.semiDocs(spark, sfDir))
-    val t = Serialize.unionDedup(text, semi)
-    val sum = t.select(org.apache.spark.sql.functions.sum(
-      org.apache.spark.sql.functions.xxhash64(
-        col("doc_id"), col("subj"), col("value_key")).cast("decimal(38,0)")))
-      .first().getDecimal(0)
-    spark.stop()
-    BigDecimal(sum)
-  }
-
-  private def tripleChecksum(cpus: Int, sfDir: String): BigDecimal = {
-    val spansDir = ensureSpansTable(sfDir)
-    val spark = Bench.session(cpus.toString)
-    import spark.implicits._
-    val docs = spark.read.parquet(spansDir).as[graft.model.Doc]
-      .repartition(cpus * 2, col("doc_id"))
-    val text = Pipeline.textPath(docs)
-    val semi = Serialize.semiTriples(Corpus.semiDocs(spark, sfDir))
-    val t = Serialize.unionDedup(text, semi)
-    // decimal accumulation: sum of 64-bit hashes overflows LongType
+    }.min
+    // decimal accumulation: a sum of 64-bit hashes overflows LongType
     // under ANSI mode
-    val sum = t.select(org.apache.spark.sql.functions.sum(
-      org.apache.spark.sql.functions.xxhash64(
-        col("doc_id"), col("subj"), col("value_key")).cast("decimal(38,0)")))
-      .first().getDecimal(0)
+    val checksum = BigDecimal(triples.select(sum(xxhash64(
+      col("doc_id"), col("subj"), col("value_key")).cast("decimal(38,0)")))
+      .first().getDecimal(0))
     spark.stop()
-    BigDecimal(sum)
-  }
-
-  /** Pure-Spark control job: CPU-bound aggregation over a synthetic
-    * range — isolates "does Spark itself scale on this box" from "does
-    * the pipeline scale".
-    */
-  private def controlAt(cpus: Int): Double = {
-    val spark = Bench.session(cpus.toString)
-    import org.apache.spark.sql.functions._
-    def job() = spark.range(0, 200000000L, 1, cpus * 2)
-      .select(sum(xxhash64(col("id")).cast("decimal(38,0)"))).first()
-    job()
-    val secs = Bench.medianOf((1 to 3).map(_ => Bench.time(job())))
-    spark.stop()
-    secs
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // single-level mode: "pipe <cpus>" / "control <cpus>" for fresh-JVM runs
-    if (args.length >= 2 && args(0) == "pipe") {
-      val cpus = args(1).toInt
-      val (s, docs, triples) = runAt(cpus, sfDir)
-      println(f"""{"metric":"pipe_level","cpus":$cpus,"sec":$s%.3f,"docs":$docs,"triples":$triples,"docs_per_sec":${docs / s}%.1f}""")
-      return
-    }
-    if (args.length >= 3 && args(0) == "cluster") {
-      val (n, c) = (args(1).toInt, args(2).toInt)
-      val (s, docs, triples) = runCluster(n, c, sfDir)
-      println(f"""{"metric":"cluster_level","executors":$n,"cores_per_exec":$c,"sec":$s%.3f,"docs":$docs,"triples":$triples,"docs_per_sec":${docs / s}%.1f}""")
-      return
-    }
-    if (args.length >= 3 && args(0) == "checksum") {
-      val (n, c) = (args(1).toInt, args(2).toInt)
-      val sum = clusterChecksum(n, c, sfDir)
-      println(s"""{"metric":"cluster_checksum","executors":$n,"cores_per_exec":$c,"checksum":"$sum"}""")
-      return
-    }
-    if (args.length >= 2 && args(0) == "control") {
-      val cpus = args(1).toInt
-      val s = controlAt(cpus)
-      println(f"""{"metric":"control_level","cpus":$cpus,"sec":$s%.3f}""")
-      return
-    }
-    val (s8, docs, triples8) = runAt(8, sfDir)
-    val (s32, _, triples32) = runAt(32, sfDir)
-    val tp8 = docs / s8
-    val tp32 = docs / s32
-    val eff = tp32 / (4.0 * tp8)
-    val c8 = tripleChecksum(8, sfDir)
-    val c32 = tripleChecksum(32, sfDir)
-    val identical = triples8 == triples32 && c8 == c32
-    println(f"""{"metric":"scaling_efficiency","value":$eff%.3f,"unit":"ratio","docs":$docs,"triples":$triples8,"sec_8c":$s8%.3f,"sec_32c":$s32%.3f,"docs_per_sec_8c":$tp8%.1f,"docs_per_sec_32c":$tp32%.1f,"identical_outputs":$identical,"sf":"$sfDir","replication":$Repl}""")
+    println(f"""{"metric":"cluster_level","executors":$nExec,"cores_per_exec":$coresPerExec,"sec":$sec%.3f,"docs":$nDocs,"triples":$nTriples,"docs_per_sec":${nDocs / sec}%.1f,"checksum":"$checksum"}""")
   }
 }

@@ -24,6 +24,16 @@ object Det {
     mix64(h)
   }
 
+  /** Catalog- and path-safe tag for scratch data built from input dir
+    * `dir` within `scope` (an application id, a replication factor).
+    * Every non-alphanumeric maps to `_`, which is lossy (`sf-x` and
+    * `sf_x` collide), so the raw dir's hash keeps distinct inputs from
+    * sharing a table.
+    */
+  private[graft] def scratchTag(dir: String, scope: String): String =
+    s"${dir}_$scope".replaceAll("[^a-zA-Z0-9]", "_") + "_" +
+      java.lang.Long.toHexString(hashStr(dir))
+
   /** Uniform int in [0, n) from a 64-bit hash. */
   def bounded(h: Long, n: Int): Int = {
     require(n > 0)

@@ -18,8 +18,11 @@ class RankingSpec extends SparkSuite {
     dir
   }
 
+  /** The exploded (doc_id, tok, tf) reference the ranking ops read. */
+  private def tfRef = Ranking.tf(Ranking.terms(spark, tmp))
+
   test("tf exact values") {
-    val tf = Ranking.tf(Ranking.terms(spark, tmp)).collect()
+    val tf = tfRef.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(tf === Set(
       (0L, "spark", 2L), (0L, "hadoop", 1L),
@@ -43,25 +46,25 @@ class RankingSpec extends SparkSuite {
   }
 
   test("idf and popularity hand-checked") {
-    val d = Ranking.dfIdf(Ranking.terms(spark, tmp), 3).collect()
+    val d = Ranking.dfIdfOverTf(tfRef, 3).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     // spark appears in 2 of 3 docs: idf = ln(3/2) = 0.405465
     assert(d("spark") === ((2L, 0.405465)))
     assert(d("hive") === ((1L, 1.098612)))
-    val p = Ranking.popularity(Ranking.terms(spark, tmp), 3)
+    val p = Ranking.popularityOverTf(tfRef, 3)
       .filter($"tok" === "spark").select("popularity").collect()(0).getDouble(0)
     assert(p === 0.666667)
   }
 
   test("tfidf stats: avg over docs containing the term") {
-    val s = Ranking.tfidfStats(Ranking.terms(spark, tmp), 3)
+    val s = Ranking.tfidfStatsOverTf(tfRef, 3)
       .filter($"tok" === "spark").collect()(0)
     // spark tfidf: doc0 = 2*ln(1.5)=0.81093, doc1 = 1*ln(1.5)=0.405465
     assert(s.getDouble(1) === 0.608198)
   }
 
   test("lu_rank top-k deterministic ordering") {
-    val top = Ranking.luRank(Ranking.terms(spark, tmp), 3, 10).collect()
+    val top = Ranking.luRankOverTf(tfRef, 3, 10).collect()
       .map(r => (r.getString(0), r.getDouble(1)))
     assert(top.length === 4) // spark, hadoop, flink, hive
     // descending scores; ties broken lexicographically

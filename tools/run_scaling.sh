@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Two-cluster-size scaling protocol (BASELINE.md): the same pipeline
-# job via spark-submit at N=1 and 4N=4 executors (2 cores each), fresh
-# JVMs per level, identical parquet spans-table input, min-of-reps.
-# Prints the per-level JSONs, the checksums, and the efficiency.
+# job via spark-submit at N=1 and 4N=4 executors (2 cores each), one
+# fresh submit per level, identical parquet spans-table input,
+# min-of-reps, and the output checksum from the same session.
+# Prints the per-level JSONs and the efficiency.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
@@ -10,20 +11,17 @@ JAR=target/scala-2.13/strephitspark_2.13-0.1.0.jar
 # always rebuild: a jar left from an earlier checkout would measure old code
 sbt -batch package
 SUBMIT=/opt/spark/bin/spark-submit
-run() { # nExec coresPerExec mode
+run() { # nExec coresPerExec
   SPARK_GRAFT_SCALE_REPL="${SPARK_GRAFT_SCALE_REPL:-100}" \
-  SPARK_GRAFT_SCALE_REPS="${SPARK_GRAFT_SCALE_REPS:-4}" \
   SPARK_GRAFT_SF_DIR="$SF_DIR" \
   "$SUBMIT" --master "local-cluster[$1,$2,4096]" --driver-memory 8g \
-    --class graft.tools.Scaling "$JAR" "$3" "$1" "$2" 2>/dev/null | grep '"metric"'
+    --class graft.tools.Scaling "$JAR" "$1" "$2" 2>/dev/null | grep '"metric"'
 }
-L1=$(run 1 2 cluster);  echo "$L1"
-L4=$(run 4 2 cluster);  echo "$L4"
-C1=$(run 1 2 checksum); echo "$C1"
-C4=$(run 4 2 checksum); echo "$C4"
-python3 - "$L1" "$L4" "$C1" "$C4" <<'EOF'
+L1=$(run 1 2); echo "$L1"
+L4=$(run 4 2); echo "$L4"
+python3 - "$L1" "$L4" <<'EOF'
 import json, sys
-l1, l4, c1, c4 = (json.loads(a) for a in sys.argv[1:5])
+l1, l4 = (json.loads(a) for a in sys.argv[1:3])
 tp1, tp4 = l1["docs_per_sec"], l4["docs_per_sec"]
 eff = tp4 / (4.0 * tp1)
 print(json.dumps({
@@ -32,5 +30,5 @@ print(json.dumps({
   "docs_per_sec_1x2": tp1, "docs_per_sec_4x2": tp4,
   "sec_1x2": l1["sec"], "sec_4x2": l4["sec"],
   "identical_outputs": (l1["triples"] == l4["triples"]
-                        and c1["checksum"] == c4["checksum"])}))
+                        and l1["checksum"] == l4["checksum"])}))
 EOF
