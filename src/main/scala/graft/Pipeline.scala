@@ -28,19 +28,13 @@ object Pipeline {
       .repartition(ingestPartitions(spark), col("doc_id"))
 
   /** Full text-path: docs -> triples DataFrame (single-pass fused
-    * link+serialize — see Serialize.textTriples scale rationale).
-    * strategy ∈ n2n | 121 | syntactic; learned = perceptron tagger
-    * with the rule model as fallback (SURVEY §2.7).
+    * link+serialize — see Serialize.textTriples scale rationale), n2n
+    * LU matching; learned = perceptron tagger with the rule model as
+    * fallback (SURVEY §2.7).
     */
-  def textPath(docs: Dataset[Doc], strategy: String = "n2n",
-               learned: Boolean = false): DataFrame = {
+  def textPath(docs: Dataset[Doc], learned: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
-    val sents = Extraction.sentences(docs)
-    val lus = strategy match {
-      case "121" => Extraction.match121(sents)
-      case "syntactic" => Extraction.matchSyntactic(sents)
-      case _ => Extraction.matchN2n(sents)
-    }
+    val lus = Extraction.matchN2n(Extraction.sentences(docs))
     val bc = spark.sparkContext.broadcast(Classification.defaultModel)
     val cls =
       if (learned) Classification.classifyLearned(lus,
@@ -55,21 +49,17 @@ object Pipeline {
     * committed documents table, not re-synthesized per run.
     */
   def triplesOver(docs: Dataset[Doc], semi: Dataset[SemiDoc],
-                  strategy: String = "n2n", learned: Boolean = false): DataFrame =
-    Serialize.unionDedup(textPath(docs, strategy, learned), Serialize.semiTriples(semi))
+                  learned: Boolean = false): DataFrame =
+    Serialize.unionDedup(textPath(docs, learned), Serialize.semiTriples(semi))
 
   /** Complete pipeline incl. semi-structured union + dedup. */
-  def triples(spark: SparkSession, sfDir: String, strategy: String = "n2n"): DataFrame =
-    triplesOver(docsFor(spark, sfDir), Corpus.semiDocs(spark, sfDir), strategy)
+  def triples(spark: SparkSession, sfDir: String): DataFrame =
+    triplesOver(docsFor(spark, sfDir), Corpus.semiDocs(spark, sfDir))
 
   /** Pipeline over a pure fixture corpus (unit/golden tests). */
-  def fixtureTriples(spark: SparkSession, n: Int, strategy: String = "n2n"): DataFrame = {
-    val docs = Corpus.fixtureCorpus(spark, n)
-      .repartition(ingestPartitions(spark), col("doc_id"))
-    val text = textPath(docs, strategy)
-    val semi = Serialize.semiTriples(Corpus.fixtureSemi(spark, n))
-    Serialize.unionDedup(text, semi)
-  }
+  def fixtureTriples(spark: SparkSession, n: Int): DataFrame =
+    triplesOver(Corpus.fixtureCorpus(spark, n).repartition(ingestPartitions(spark), col("doc_id")),
+      Corpus.fixtureSemi(spark, n))
 
   /** Rejected-items sideline (SURVEY §2.4 J5): classification-stage
     * rejects (no subject, unfilled core FE) ∪ serializer-stage rejects

@@ -28,15 +28,20 @@ object Dedup {
     */
   val MaxBucket = 64
 
-  /** Drop members of degenerate buckets before a bucket self-join.
-    * Window count over the same key the join shuffles on — AQE reuses
-    * the partitioning, so the cap costs no extra exchange.
+  /** The candidate rule every near-dup detector shares: drop members
+    * of buckets over `MaxBucket`, then self-join on `keys`, sides
+    * aliased `l`/`r`, with `pair` (over those aliases) as the extra
+    * condition. The cap's count window partitions by the join key, so
+    * AQE reuses its exchange for the join.
     */
-  private[operators] def capBuckets(buckets: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-    buckets.withColumn("__bsize", count(lit(1)).over(w))
-      .filter(col("__bsize") <= cap)
+  private[operators] def bucketPairs(rows: DataFrame, keys: Seq[String],
+                                     pair: Column): DataFrame = {
+    val capped = rows
+      .withColumn("__bsize", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("__bsize") <= MaxBucket)
       .drop("__bsize")
+    capped.as("l").join(capped.as("r"),
+      keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) && pair)
   }
 
   /** Precompiled tokenizer pattern (round 6): String.split(regex)
@@ -137,18 +142,6 @@ object Dedup {
   def minhashBuckets(docs: DataFrame): DataFrame =
     bandedSigs(docs).select("doc_id", "band", "bucket")
 
-  /** MinHash+LSH near-dup candidate pairs with estimated Jaccard ≥
-    * threshold. Pure Spark: the SIGNATURE RIDES THROUGH the banded
-    * shuffle ((band, bucket, sig) rows), so one typed map computes
-    * minhash exactly once and the bucket self-join yields both sides'
-    * signatures directly — the earlier form re-joined a separate
-    * signatures table per side, re-computing minhash over the corpus
-    * twice more and adding two shuffle joins. Payload cost: sig
-    * (NumHashes longs) × Bands per doc through one shuffle — the
-    * standard trade in production LSH dedup. Candidate fan-out is
-    * bounded by the hot-bucket cap; multi-band collisions collapse via
-    * distinct before the estimate.
-    */
   /** (doc_id, sig, band, bucket) rows — the LSH index state, one
     * minhash compute per doc, signature carried alongside its band
     * keys. At scale this IS the committed dedup-index table a corpus
@@ -179,55 +172,48 @@ object Dedup {
     aggregate(zip_with(col("sig_a"), col("sig_b"), (a, b) => when(a === b, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / lit(NumHashes)
 
-  def minhashPairs(docs: DataFrame, threshold: Double): DataFrame =
-    minhashPairsOfIndex(capBuckets(bandedSigs(docs), Seq("band", "bucket"), MaxBucket),
-      threshold)
-
-  /** Candidate pairs from an already-banded (and capped) signature
-    * index. The multi-band duplicate collapse is a (doc_a, doc_b)
-    * GROUP-BY, not a whole-row distinct: the earlier distinct shuffled
-    * both 32-long signatures per candidate row (~0.5 KB each) just to
-    * dedup band collisions — the estimate is computed per collision row
-    * (32 cheap integer compares, identical for every copy) and only
-    * (doc_a, doc_b, est) enters the exchange, with the map-side partial
-    * agg collapsing same-partition copies before the wire.
+  /** MinHash+LSH near-dup candidate pairs with estimated Jaccard ≥
+    * threshold. Pure Spark: the SIGNATURE RIDES THROUGH the banded
+    * shuffle ((band, bucket, sig) rows), so one typed map computes
+    * minhash exactly once and the bucket self-join yields both sides'
+    * signatures directly — the earlier form re-joined a separate
+    * signatures table per side, re-computing minhash over the corpus
+    * twice more and adding two shuffle joins. Payload cost: sig
+    * (NumHashes longs) × Bands per doc through one shuffle — the
+    * standard trade in production LSH dedup. Candidate fan-out is
+    * bounded by the hot-bucket cap.
     */
-  private[operators] def minhashPairsOfIndex(banded: DataFrame,
-                                             threshold: Double): DataFrame =
-    banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
+  def minhashPairs(docs: DataFrame, threshold: Double): DataFrame =
+    estPairs(bucketPairs(bandedSigs(docs), Seq("band", "bucket"),
+      col("l.doc_id") < col("r.doc_id")), "doc_a", "doc_b", threshold)
+
+  /** Estimated-Jaccard pairs (named `a`, `b`) of a `bucketPairs`
+    * candidate join over banded signatures. The multi-band duplicate
+    * collapse is a GROUP-BY, not a whole-row distinct: a distinct
+    * would shuffle both 32-long signatures per candidate row (~0.5 KB
+    * each) just to dedup band collisions — the estimate is computed per
+    * collision row (32 cheap integer compares, identical for every
+    * copy) and only (a, b, est) enters the exchange, with the map-side
+    * partial agg collapsing same-partition copies before the wire.
+    */
+  private def estPairs(cand: DataFrame, a: String, b: String,
+                       threshold: Double): DataFrame =
+    cand.select(col("l.doc_id").as(a), col("r.doc_id").as(b),
         col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
       .withColumn("est_jaccard", estJaccard)
-      .groupBy(col("doc_a"), col("doc_b"))
+      .groupBy(col(a), col(b))
       .agg(max(col("est_jaccard")).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("est_jaccard"), 6).as("est_jaccard"))
-
-  /** INCREMENTAL near-dup detection: pairs of a NEW batch against the
-    * existing corpus (and within the batch), with NO old×old candidate
-    * ever generated — the production shape for ingesting a crawl
-    * increment against a 100 TB corpus. The corpus side joins through
-    * its banded-signature index (`bandedSigs` — in production a
-    * committed table, not recomputed); the equi-join keys are the same
-    * (band, bucket) pairs, so cost scales with the INCREMENT size, not
-    * the corpus. Output: (doc_new, doc_other, est_jaccard) where
-    * doc_other is an existing doc or a batch sibling.
-    */
-  def incrementalPairs(corpus: DataFrame, fresh: DataFrame,
-                       threshold: Double): DataFrame =
-    incrementalPairsIndexed(bandedSigs(corpus), fresh, threshold)
+      .select(col(a), col(b), round(col("est_jaccard"), 6).as("est_jaccard"))
 
   /** COMMITTED-INDEX form of the corpus side (round-3 VERDICT "What's
     * missing" #1): write the banded-signature index ONCE per corpus
     * via `writeIndex` (a TableIO snapshot, partitioned by band), and
     * every daily increment reads the committed table instead of
-    * re-minhashing the whole corpus — `incrementalPairs` above is the
-    * recompute-everything convenience form and simply routes through
-    * here. The equi-join keys and output are identical either way
-    * (pinned by the unchanged q_dedup_incremental oracle).
+    * re-minhashing the whole corpus (`incrementalPairsIndexed` over
+    * `bandedSigs(corpus)` is the recompute-everything form). The
+    * equi-join keys and output are identical either way (pinned by the
+    * unchanged q_dedup_incremental oracle).
     */
   def writeIndex(docs: DataFrame, table: String,
                  snapshotId: String = "index"): graft.sources.TableIO.Manifest =
@@ -250,27 +236,25 @@ object Dedup {
       partitionBy = Seq("band"), snapshotId = snapshotId,
       mode = org.apache.spark.sql.SaveMode.Append)
 
+  /** INCREMENTAL near-dup detection: pairs of a NEW batch against the
+    * existing corpus (and within the batch), with NO old×old candidate
+    * ever generated — the production shape for ingesting a crawl
+    * increment against a 100 TB corpus. The corpus side joins through
+    * its banded-signature index (`readIndex` of the committed table, or
+    * `bandedSigs(corpus)`); the equi-join keys are the same (band,
+    * bucket) pairs, so cost scales with the INCREMENT size, not the
+    * corpus. Output: (doc_new, doc_other, est_jaccard) where doc_other
+    * is an existing doc or a batch sibling.
+    */
   def incrementalPairsIndexed(corpusIndex: DataFrame, fresh: DataFrame,
                               threshold: Double): DataFrame = {
-    val idx = capBuckets(
-      corpusIndex.select("doc_id", "sig", "band", "bucket")
-        .withColumn("is_new", lit(false))
-        .unionByName(bandedSigs(fresh).withColumn("is_new", lit(true))),
-      Seq("band", "bucket"), MaxBucket)
-    idx.as("l")
-      .join(idx.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.is_new") && // left side is always a new doc
-          (!col("r.is_new") || col("l.doc_id") < col("r.doc_id")))
-      .select(col("l.doc_id").as("doc_new"), col("r.doc_id").as("doc_other"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .withColumn("est_jaccard", estJaccard)
-      // group-by collapse, not whole-row distinct — see minhashPairsOfIndex
-      .groupBy(col("doc_new"), col("doc_other"))
-      .agg(max(col("est_jaccard")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("doc_new"), col("doc_other"),
-        round(col("est_jaccard"), 6).as("est_jaccard"))
+    val idx = corpusIndex.select("doc_id", "sig", "band", "bucket")
+      .withColumn("is_new", lit(false))
+      .unionByName(bandedSigs(fresh).withColumn("is_new", lit(true)))
+    // the left side is always a new doc
+    estPairs(bucketPairs(idx, Seq("band", "bucket"),
+        col("l.is_new") && (!col("r.is_new") || col("l.doc_id") < col("r.doc_id"))),
+      "doc_new", "doc_other", threshold)
   }
 
   /** SimHash table + banded candidate pairs within Hamming distance k.
@@ -290,16 +274,13 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val t = simhashTable(docs)
-    val banded0 = t.select($"doc_id", $"simhash",
+    val banded = t.select($"doc_id", $"simhash",
       explode(array((0 until 4).map(i =>
         struct(lit(i).as("chunk"),
           shiftright($"simhash", i * 16).bitwiseAND(lit(0xffffL)).as("key"))): _*))
         .as("b"))
       .select($"doc_id", $"simhash", $"b.chunk", $"b.key")
-    val banded = capBuckets(banded0, Seq("chunk", "key"), MaxBucket)
-    banded.as("l").join(banded.as("r"),
-      col("l.chunk") === col("r.chunk") && col("l.key") === col("r.key") &&
-        col("l.doc_id") < col("r.doc_id"))
+    bucketPairs(banded, Seq("chunk", "key"), col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
         bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))).as("hamming"))
       // multi-chunk collisions collapse via group-by (hamming is

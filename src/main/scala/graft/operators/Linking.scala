@@ -42,28 +42,30 @@ object Linking {
         $"c.etype".as("etype"), $"c.text".as("chunk_text"))
   }
 
-  /** Broadcast link + best-link window (max prior, tie -> min qid —
-    * the pinned determinism rule, SURVEY.md §2.5 `best_link`).
+  /** One link per mention: max prior, tie -> min qid — the pinned
+    * determinism rule (SURVEY.md §2.5 `best_link`).
     */
+  private def bestLink(joined: DataFrame): DataFrame =
+    joined.withColumn("rn", row_number().over(
+        Window.partitionBy(col("doc_id"), col("sentence_offset"), col("fe"))
+          .orderBy(col("prior").desc, col("qid"))))
+      .filter(col("rn") === 1).drop("rn")
+
+  /** Broadcast link + best-link window. */
   def link(cls: Dataset[ClassifiedSentence]): DataFrame = {
-    val spark = cls.sparkSession
-    import spark.implicits._
     val m = mentions(cls)
-    val a = aliasDf(spark)
-    val joined = m.join(broadcast(a),
-      lower(m("chunk_text")) === a("alias_norm") && m("etype") === a("etype"))
-      .drop(a("etype"))
-    val w = Window.partitionBy($"doc_id", $"sentence_offset", $"fe")
-      .orderBy($"prior".desc, $"qid")
-    joined.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .drop("rn", "alias_norm", "is_head")
+    val a = aliasDf(cls.sparkSession)
+    bestLink(m.join(broadcast(a),
+        lower(m("chunk_text")) === a("alias_norm") && m("etype") === a("etype"))
+        .drop(a("etype")))
+      .drop("alias_norm", "is_head")
   }
 
   /** Same linking but through the generic salted shuffle-join path —
     * exercises Skew.saltedJoin on the pipeline's own skewed alias
     * distribution; must produce identical rows to `link`.
     */
-  def linkSalted(cls: Dataset[ClassifiedSentence], salt: Int = 8): DataFrame = {
+  def linkSalted(cls: Dataset[ClassifiedSentence]): DataFrame = {
     val spark = cls.sparkSession
     import spark.implicits._
     val m = mentions(cls).withColumn("alias_key", lower($"chunk_text"))
@@ -73,12 +75,8 @@ object Linking {
     // classified stream, and the pre-pass would re-run classification
     // once per action (round-2 VERDICT "What's wrong" #3)
     val hot = aliasDf(spark).filter($"is_head").select($"alias_norm").distinct()
-    val joined = Skew.saltedJoin(m, a, Seq("alias_key"), Seq("alias_norm"), salt,
-      hotKeys = Some(hot))
-      .filter($"etype" === $"a_etype")
-    val w = Window.partitionBy($"doc_id", $"sentence_offset", $"fe")
-      .orderBy($"prior".desc, $"qid")
-    joined.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .drop("rn", "alias_norm", "alias_key", "a_etype", "is_head")
+    bestLink(Skew.saltedJoin(m, a, Seq("alias_key"), Seq("alias_norm"), Skew.Salt, hot)
+        .filter($"etype" === $"a_etype"))
+      .drop("alias_norm", "alias_key", "a_etype", "is_head")
   }
 }

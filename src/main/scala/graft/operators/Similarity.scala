@@ -37,9 +37,6 @@ object Similarity {
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("vec"))
   }
 
-  private def loadEmb(spark: SparkSession, sfDir: String): DataFrame =
-    loadEmbeddings(spark, sfDir)
-
   /** Deterministic planted near-duplicate vectors: every vec_id < n
     * gains a copy at vec_id + 1,000,000 nudged by 0.01·sin(i) per
     * component — cosine ≈ 0.9999 vs the original, so threshold-based
@@ -53,23 +50,32 @@ object Similarity {
           transform(col("vec"),
             (x, i) => x + lit(0.01) * sin(i.cast("double"))).as("vec")))
 
+  /** The query set of every ANN key: the first `nQueries` vectors as
+    * (query_id, qvec).
+    */
+  private def queriesOf(emb: DataFrame, nQueries: Int): DataFrame =
+    emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
+
+  /** THE per-query top-k rule every ANN path ranks by: cosine
+    * descending, vec_id tie-break, ranks 1..k. `scored` carries
+    * (query_id, vec_id, cos), one row per (query, candidate).
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
+        round(col("cos"), 6).as("cos"))
+
   /** Exact brute-force cosine top-k: the (small) query set is broadcast
-    * against the corpus; per-query top-k via window rank. Exact
-    * baseline for ANN recall measurement.
+    * against the corpus. Exact baseline for ANN recall measurement.
     */
   def bruteForceTopK(spark: SparkSession, sfDir: String,
                      nQueries: Int, k: Int): DataFrame = {
-    import spark.implicits._
-    val corpus = loadEmb(spark, sfDir)
-    val queries = corpus.filter($"vec_id" < nQueries)
-      .select($"vec_id".as("query_id"), $"vec".as("qvec"))
-    val scored = corpus.join(broadcast(queries), $"vec_id" =!= $"query_id")
-      .withColumn("cos", cosine($"vec", $"qvec"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id")
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"cos", 6).as("cos"))
+    val corpus = loadEmbeddings(spark, sfDir)
+    topK(corpus.join(broadcast(queriesOf(corpus, nQueries)), col("vec_id") =!= col("query_id"))
+      .withColumn("cos", cosine(col("vec"), col("qvec"))), k)
   }
 
   /** Random-hyperplane LSH bucket id for hash table `table`: sign bits
@@ -122,23 +128,25 @@ object Similarity {
               nQueries: Int, k: Int, bits: Int = 8,
               dim: Int = DefaultDim, tables: Int = 4): DataFrame = {
     import spark.implicits._
-    val emb = loadEmb(spark, sfDir)
-    val bucketed = emb
+    val bucketed = loadEmbeddings(spark, sfDir)
       .withColumn("bucket", explode(lshBuckets($"vec", dim, bits, tables)))
     val queries = bucketed.filter($"vec_id" < nQueries)
       .select($"vec_id".as("query_id"), $"vec".as("qvec"), $"bucket")
-    val scored = bucketed.join(queries, Seq("bucket"))
+    topK(bucketed.join(queries, Seq("bucket"))
       .filter($"vec_id" =!= $"query_id")
       .withColumn("cos", cosine($"vec", $"qvec"))
       // same pair may collide in >1 table: one row per (query, candidate)
       .groupBy($"query_id", $"vec_id")
-      .agg(max($"cos").as("cos"))
-    val w = Window.partitionBy($"query_id").orderBy($"cos".desc, $"vec_id")
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"cos", 6).as("cos"))
+      .agg(max($"cos").as("cos")), k)
   }
+
+  /** Built indexes are memoized per (dir, k, dim): the testdata is
+    * read-only, and without the cache every DataFrame CONSTRUCTION of
+    * q_ann_ivf (Explain, repeated Verify calls) silently re-runs the
+    * two index-build jobs.
+    */
+  private val ivfCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Array[(Int, Array[Double])]]()
 
   /** IVF coarse-quantizer centroids: an explicit INDEX-BUILD action
     * (the one sanctioned driver-side step — building an index is an
@@ -146,37 +154,28 @@ object Similarity {
     * seed centroids are the first `k` vectors by vec_id, refined by one
     * Lloyd step (mean of assigned vectors — deterministic given seeds).
     */
-  /** Built indexes are memoized per (dir, k, dim): the testdata is
-    * read-only, and without the cache every DataFrame CONSTRUCTION of
-    * q_ann_ivf (Explain, repeated Verify calls) silently re-runs the
-    * two index-build jobs.
-    */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int, Int), Array[(Int, Array[Double])]]()
-
   def buildIvfCentroids(spark: SparkSession, sfDir: String,
-                        k: Int, dim: Int = DefaultDim,
-                        iters: Int = 1): Array[(Int, Array[Double])] =
-    ivfCache.computeIfAbsent((sfDir, k, dim, iters),
-      _ => buildIvfCentroidsUncached(spark, sfDir, k, dim, iters))
+                        k: Int, dim: Int = DefaultDim): Array[(Int, Array[Double])] =
+    ivfCache.computeIfAbsent((sfDir, k, dim),
+      _ => buildIvfCentroidsUncached(spark, sfDir, k, dim))
 
   private def buildIvfCentroidsUncached(spark: SparkSession, sfDir: String,
-                                        k: Int, dim: Int, iters: Int): Array[(Int, Array[Double])] = {
+                                        k: Int, dim: Int): Array[(Int, Array[Double])] = {
     import spark.implicits._
-    val emb = loadEmb(spark, sfDir)
+    val emb = loadEmbeddings(spark, sfDir)
     val seeds = emb.filter($"vec_id" < k)
       .orderBy($"vec_id")
       .collect()
       .map(r => r.getSeq[Double](1).toArray)
-    // `iters` Lloyd refinements: assign all vectors to the nearest
-    // centroid (one distributed agg per round), take per-cell means.
+    // The Lloyd step: assign all vectors to the nearest seed (one
+    // distributed agg), take per-cell means.
     // Means are computed from FIXED-POINT integer sums (x·10⁹ as long):
     // a double avg()'s partial-sum merge order is randomized by the
     // shuffle, so its low bits — and through argmin, a near-tied cell
     // assignment — could vary between runs once the input has >1
     // split; integer addition is order-independent, keeping the index
     // build bit-deterministic at any parallelism. A cell left empty by
-    // a round drops out (its id simply stops appearing).
+    // the step drops out (its id simply stops appearing).
     // MELTED per-dim aggregation (round-4 VERDICT "What's wrong" #4):
     // posexplode → groupBy(cell, pos) keeps the plan O(1) in dim — the
     // old per-dim sum-column fan-out built `dim` aggregate expressions
@@ -184,25 +183,20 @@ object Similarity {
     // Values are byte-identical: the per-element fixed-point cast is
     // unchanged and integer sums are order-independent (the frozen
     // q_ann_ivf* oracles did not move — regen-diff confirmed).
-    var cents: Array[(Int, Array[Double])] =
-      seeds.zipWithIndex.map { case (v, i) => (i, v) }
-    for (_ <- 0 until iters) {
-      val rows = perCellDimSums(assignCells(emb, centroidTable(spark, cents)))
-        .collect()
-      // sorted by cell id: downstream positional indices must be stable
-      cents = rows.groupBy(_.getInt(0)).toArray.map { case (cell, rs) =>
-        val v = new Array[Double](dim)
-        // positions beyond `dim` are ignored (the pre-melt per-column
-        // form truncated identically; unguarded, a vec longer than
-        // `dim` would crash the driver mid-build)
-        rs.foreach { r =>
-          if (r.getInt(1) < dim)
-            v(r.getInt(1)) = r.getLong(3) / 1e9 / r.getLong(2).toDouble
-        }
-        (cell, v)
-      }.sortBy(_._1)
-    }
-    cents
+    val rows = perCellDimSums(assignCells(emb,
+      centroidTable(spark, seeds.zipWithIndex.map { case (v, i) => (i, v) }))).collect()
+    // sorted by cell id: downstream positional indices must be stable
+    rows.groupBy(_.getInt(0)).toArray.map { case (cell, rs) =>
+      val v = new Array[Double](dim)
+      // positions beyond `dim` are ignored (the pre-melt per-column
+      // form truncated identically; unguarded, a vec longer than
+      // `dim` would crash the driver mid-build)
+      rs.foreach { r =>
+        if (r.getInt(1) < dim)
+          v(r.getInt(1)) = r.getLong(3) / 1e9 / r.getLong(2).toDouble
+      }
+      (cell, v)
+    }.sortBy(_._1)
   }
 
   /** Melted per-(cell, dim) fixed-point sums of assigned vectors —
@@ -282,12 +276,8 @@ object Similarity {
   def ivfTopK(spark: SparkSession, sfDir: String,
               centroids: Array[(Int, Array[Double])],
               nQueries: Int, k: Int, nprobe: Int = 2): DataFrame = {
-    import spark.implicits._
-    val emb = loadEmb(spark, sfDir)
-    ivfTopKOver(emb,
-      emb.filter($"vec_id" < nQueries)
-        .select($"vec_id".as("query_id"), $"vec".as("qvec")),
-      centroidTable(spark, centroids), k, nprobe)
+    val emb = loadEmbeddings(spark, sfDir)
+    ivfTopKOver(emb, queriesOf(emb, nQueries), centroidTable(spark, centroids), k, nprobe)
   }
 
   /** IVF probe over explicit corpus (vec_id, vec) and query (query_id,
@@ -297,16 +287,9 @@ object Similarity {
     */
   def ivfTopKOver(corpus: DataFrame, queries: DataFrame, cents: DataFrame,
                   k: Int, nprobe: Int): DataFrame = {
-    val corpusCells = assignCells(corpus, cents)
-    val probed = probeCells(queries, cents, nprobe)
-    val scored = corpusCells.join(probed, Seq("cell"))
+    topK(assignCells(corpus, cents).join(probeCells(queries, cents, nprobe), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosine(col("vec"), col("qvec")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        round(col("cos"), 6).as("cos"))
+      .withColumn("cos", cosine(col("vec"), col("qvec"))), k)
   }
 
   /** Per-query recall of an approximate neighbor set against the exact
@@ -321,15 +304,23 @@ object Similarity {
         sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
       .withColumn("recall", round(col("n_hit") / col("n_exact"), 6))
 
+  /** Per-query recall of the IVF probe over `corpus` against the exact
+    * float baseline (queries full precision either way).
+    */
+  private def ivfRecallOver(spark: SparkSession, sfDir: String, corpus: DataFrame,
+                            centroids: Array[(Int, Array[Double])],
+                            nQueries: Int, k: Int, nprobe: Int): DataFrame =
+    recallVs(
+      bruteForceTopK(spark, sfDir, nQueries, k).select("query_id", "neighbor_id"),
+      ivfTopKOver(corpus, queriesOf(loadEmbeddings(spark, sfDir), nQueries),
+        centroidTable(spark, centroids), k, nprobe)
+        .select("query_id", "neighbor_id"))
+
   def ivfRecall(spark: SparkSession, sfDir: String,
                 centroids: Array[(Int, Array[Double])],
-                nQueries: Int, k: Int, nprobe: Int): DataFrame = {
-    import spark.implicits._
-    recallVs(
-      bruteForceTopK(spark, sfDir, nQueries, k).select($"query_id", $"neighbor_id"),
-      ivfTopK(spark, sfDir, centroids, nQueries, k, nprobe)
-        .select($"query_id", $"neighbor_id"))
-  }
+                nQueries: Int, k: Int, nprobe: Int): DataFrame =
+    ivfRecallOver(spark, sfDir, loadEmbeddings(spark, sfDir),
+      centroids, nQueries, k, nprobe)
 
   /** Per-dimension (min, max) of an embedding corpus — the quantizer
     * calibration stats. An explicit index-build-style action (64
@@ -343,7 +334,7 @@ object Similarity {
     quantCache.computeIfAbsent((sfDir, dim), _ => {
       // melted form — plan O(1) in dim (round-4 VERDICT #4); min/max
       // are order-independent so the calibration arrays are identical
-      val byPos = perDimMinMax(loadEmb(spark, sfDir)).collect()
+      val byPos = perDimMinMax(loadEmbeddings(spark, sfDir)).collect()
         .map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
       // loud failure beats a KeyError deep in the encode path when
       // `dim` exceeds the corpus vectors' actual width
@@ -411,7 +402,7 @@ object Similarity {
     import spark.implicits._
     val (mn, mx) = quantStats(spark, sfDir, dim)
     val (mnC, rangeC) = quantCalib(mn, mx)
-    loadEmb(spark, sfDir)
+    loadEmbeddings(spark, sfDir)
       .withColumn("quant", quantEncode($"vec", mnC, rangeC))
       .select($"vec_id", quantDecode($"quant", mnC, rangeC).as("vec"))
   }
@@ -424,32 +415,20 @@ object Similarity {
   def ivfQuantRecall(spark: SparkSession, sfDir: String,
                      centroids: Array[(Int, Array[Double])],
                      nQueries: Int, k: Int, nprobe: Int,
-                     dim: Int = DefaultDim): DataFrame = {
-    import spark.implicits._
-    val queries = loadEmb(spark, sfDir).filter($"vec_id" < nQueries)
-      .select($"vec_id".as("query_id"), $"vec".as("qvec"))
-    recallVs(
-      bruteForceTopK(spark, sfDir, nQueries, k).select($"query_id", $"neighbor_id"),
-      ivfTopKOver(dequantizedEmbeddings(spark, sfDir, dim), queries,
-        centroidTable(spark, centroids), k, nprobe)
-        .select($"query_id", $"neighbor_id"))
-  }
+                     dim: Int = DefaultDim): DataFrame =
+    ivfRecallOver(spark, sfDir, dequantizedEmbeddings(spark, sfDir, dim),
+      centroids, nQueries, k, nprobe)
 
-  /** Embedding-cosine near-duplicate pairs (bucketed; cos ≥ threshold). */
-  def cosineDupPairs(spark: SparkSession, sfDir: String,
-                     threshold: Double, bits: Int = 12,
-                     dim: Int = DefaultDim, tables: Int = 4): DataFrame =
-    cosineDupPairsOf(loadEmb(spark, sfDir), threshold, bits, dim, tables)
-
-  /** Same, over an explicit (vec_id, vec) DataFrame.
+  /** Embedding-cosine near-duplicate pairs over a (vec_id, vec)
+    * DataFrame (bucketed; cos ≥ threshold).
     *
     * Scale shape (round-2 VERDICT "What's wrong" #1 — the old form was
     * a single 6-bit table = 64 GLOBAL buckets, an uncapped ~n²/64
     * self-join at corpus scale): multi-table OR-of-bands banding via
     * `lshBuckets` (same machinery as ANN) with many more bits per
     * table, so expected bucket size is n/2^bits, plus the same
-    * hot-bucket cap as the minhash/simhash pair stages
-    * (Dedup.capBuckets) bounding the worst bucket's quadratic term.
+    * capped bucket self-join as the minhash/simhash pair stages
+    * (Dedup.bucketPairs) bounding the worst bucket's quadratic term.
     * Recall at cos≥t is 1-(1-p^bits)^tables with p = 1-acos(t)/π —
     * for t=0.99, bits=12, 4 tables the miss probability is ~1e-5;
     * planted positives are pinned in SimilaritySpec. A pair colliding
@@ -458,13 +437,9 @@ object Similarity {
     */
   def cosineDupPairsOf(emb: DataFrame, threshold: Double, bits: Int = 12,
                        dim: Int = DefaultDim, tables: Int = 4): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val bucketed = Dedup.capBuckets(
-      emb.withColumn("bucket", explode(lshBuckets($"vec", dim, bits, tables))),
-      Seq("bucket"), Dedup.MaxBucket)
-    bucketed.as("l").join(bucketed.as("r"),
-      col("l.bucket") === col("r.bucket") && col("l.vec_id") < col("r.vec_id"))
+    Dedup.bucketPairs(
+        emb.withColumn("bucket", explode(lshBuckets(col("vec"), dim, bits, tables))),
+        Seq("bucket"), col("l.vec_id") < col("r.vec_id"))
       .withColumn("cos", cosine(col("l.vec"), col("r.vec")))
       .filter(col("cos") >= threshold)
       .groupBy(col("l.vec_id").as("vec_a"), col("r.vec_id").as("vec_b"))

@@ -49,15 +49,9 @@ object SpanDedup {
 
   /** Window width in tokens. Lee et al. remove ≥50-BPE-token repeats;
     * the fixture docs are ~100 tokens, so W=8 keeps multiple windows
-    * per planted passage at test scale (the operator is W-agnostic).
+    * per planted passage at test scale.
     */
   val W = 8
-
-  /** Windows-per-hash cap for the PAIR view only (see scaladoc above —
-    * the scrub path must NOT cap, boilerplate is exactly what it
-    * removes). Same constant family as Dedup.MaxBucket.
-    */
-  val MaxWindowBucket = 64
 
   /** Minimum shared duplicated windows for a pair to surface. */
   val MinShared = 3
@@ -88,10 +82,10 @@ object SpanDedup {
     * One scan, one explode; h = xxhash64(ngram) is the join/shuffle key
     * so the window strings never ride a shuffle in the scrub path.
     */
-  def windows(docs: DataFrame, w: Int = W): DataFrame =
+  def windows(docs: DataFrame): DataFrame =
     docs.withColumn("__toks", toks(col("text")))
       .select(col("doc_id"),
-        posexplode(Ngrams.strings(col("__toks"), w)).as(Seq("__p", "ngram")))
+        posexplode(Ngrams.strings(col("__toks"), W)).as(Seq("__p", "ngram")))
       .select(col("doc_id"), (col("__p") + 1).as("start"), col("ngram"),
         xxhash64(col("ngram")).as("h"))
 
@@ -112,26 +106,26 @@ object SpanDedup {
     * dup-key aggregate and the join side are separate subtrees, and
     * Spark has no common-subplan reuse without materialization. A
     * production run over a committed corpus materializes the windows
-    * table ONCE (TableIO snapshot, partitioned by pmod(h, shards) so a
-    * dup-key probe is partition-prunable) and BOTH stages scan it; the
-    * corpus text is then touched exactly once, for the rebuild. Same
+    * table ONCE (TableIO snapshot, partitioned by pmod(h, IndexShards)
+    * so a dup-key probe is partition-prunable) and BOTH stages scan it;
+    * the corpus text is then touched exactly once, for the rebuild. Same
     * pattern as `Dedup.writeIndex` — and the same maintenance story:
     * a crawl increment appends its windows (`appendWindows`), it never
     * re-extracts the corpus.
     */
-  def writeWindows(docs: DataFrame, table: String, w: Int = W,
-                   shards: Int = IndexShards,
+  def writeWindows(docs: DataFrame, table: String,
                    snapshotId: String = "windows"): graft.sources.TableIO.Manifest =
-    graft.sources.TableIO.write(
-      windows(docs, w).withColumn("shard", pmod(col("h"), lit(shards.toLong))),
-      table, partitionBy = Seq("shard"), snapshotId = snapshotId)
+    graft.sources.TableIO.write(shardedWindows(docs), table,
+      partitionBy = Seq("shard"), snapshotId = snapshotId)
 
-  def appendWindows(docs: DataFrame, table: String, snapshotId: String,
-                    w: Int = W, shards: Int = IndexShards): graft.sources.TableIO.Manifest =
-    graft.sources.TableIO.write(
-      windows(docs, w).withColumn("shard", pmod(col("h"), lit(shards.toLong))),
-      table, partitionBy = Seq("shard"), snapshotId = snapshotId,
+  def appendWindows(docs: DataFrame, table: String,
+                    snapshotId: String): graft.sources.TableIO.Manifest =
+    graft.sources.TableIO.write(shardedWindows(docs), table,
+      partitionBy = Seq("shard"), snapshotId = snapshotId,
       mode = org.apache.spark.sql.SaveMode.Append)
+
+  private def shardedWindows(docs: DataFrame): DataFrame =
+    windows(docs).withColumn("shard", pmod(col("h"), lit(IndexShards.toLong)))
 
   def readWindows(spark: SparkSession, table: String): DataFrame =
     graft.sources.TableIO.read(spark, table)
@@ -147,11 +141,11 @@ object SpanDedup {
     * committed-index path keeps `windows` (the table stores the ngram
     * strings; its h stays xxhash64(ngram)).
     */
-  private[operators] def windowKeysToked(toked: DataFrame, w: Int = W): DataFrame =
+  private[operators] def windowKeysToked(toked: DataFrame): DataFrame =
     toked
       .withColumn("__th", Ngrams.tokenHashes(col("__toks")))
       .select(col("doc_id"),
-        posexplode(Ngrams.keys(col("__th"), w)).as(Seq("__p", "h")))
+        posexplode(Ngrams.keys(col("__th"), W)).as(Seq("__p", "h")))
       .select(col("doc_id"), (col("__p") + 1).as("start"), col("h"))
 
   /** Per-doc duplicate-passage metrics + the scrubbed text: tokens at
@@ -165,20 +159,20 @@ object SpanDedup {
     * funnel uses (its checkpoint already carries the token array, so
     * neither the window pass nor the rebuild re-tokenizes).
     */
-  def spanScrub(docs: DataFrame, w: Int = W): DataFrame =
-    spanScrubToked(docs.withColumn("__toks", toks(col("text"))), w)
+  def spanScrub(docs: DataFrame): DataFrame =
+    spanScrubToked(docs.withColumn("__toks", toks(col("text"))))
 
-  private[graft] def spanScrubToked(toked: DataFrame, w: Int = W): DataFrame =
-    scrubCore(toked, windowKeysToked(toked, w), w)
+  private[graft] def spanScrubToked(toked: DataFrame): DataFrame =
+    scrubCore(toked, windowKeysToked(toked))
 
   /** The scrub over an explicit windows frame — pass `readWindows` of a
     * committed table and the corpus text is scanned exactly once (the
     * rebuild); the two window-side stages scan the index table.
     */
-  def spanScrubOver(docs: DataFrame, wins: DataFrame, w: Int = W): DataFrame =
-    scrubCore(docs.withColumn("__toks", toks(col("text"))), wins, w)
+  def spanScrubOver(docs: DataFrame, wins: DataFrame): DataFrame =
+    scrubCore(docs.withColumn("__toks", toks(col("text"))), wins)
 
-  private def scrubCore(toked: DataFrame, wins: DataFrame, w: Int): DataFrame = {
+  private def scrubCore(toked: DataFrame, wins: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // early projection: the scrub path needs only (doc_id, start, h) —
     // the window strings stay out of this shuffle entirely.
@@ -206,7 +200,7 @@ object SpanDedup {
     // the old explode + distinct did.
     val dupAgg = dup
       .select(col("doc_id"),
-        sequence(col("start"), col("start") + (w - 1)).as("__ps"))
+        sequence(col("start"), col("start") + (W - 1)).as("__ps"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("int").as("n_dup_windows"),
         array_distinct(flatten(collect_list(col("__ps")))).as("cov"))
@@ -224,7 +218,7 @@ object SpanDedup {
     toked
       .join(dupAgg, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        when(nToks >= w, nToks - (w - 1))
+        when(nToks >= W, nToks - (W - 1))
           .otherwise(0).cast("int").as("n_windows"),
         coalesce(col("n_dup_windows"), lit(0)).as("n_dup_windows"),
         coalesce(size(col("cov")), lit(0)).as("n_covered"),
@@ -234,19 +228,16 @@ object SpanDedup {
   }
 
   /** Investigative pair view: docs sharing ≥ `minShared` duplicated
-    * windows, via a capped hash equi-join (ngram string equality inside
-    * the join guards the hash against collisions — the string rides
-    * this shuffle, which is bounded by the cap).
+    * windows, via the capped hash bucket self-join
+    * (`Dedup.bucketPairs`; ngram string equality inside the join guards
+    * the hash against collisions — the string rides this shuffle,
+    * which is bounded by the cap). Only this view caps: the scrub path
+    * must not, boilerplate is exactly what it removes.
     */
-  def spanDupPairs(docs: DataFrame, w: Int = W,
-                   minShared: Int = MinShared,
-                   cap: Int = MaxWindowBucket): DataFrame = {
-    val wins = Dedup.capBuckets(windows(docs, w), Seq("h"), cap)
-    wins.as("l").join(wins.as("r"),
-        col("l.h") === col("r.h") && col("l.ngram") === col("r.ngram") &&
-          col("l.doc_id") < col("r.doc_id"))
+  def spanDupPairs(docs: DataFrame, minShared: Int = MinShared): DataFrame =
+    Dedup.bucketPairs(windows(docs), Seq("h"),
+        col("l.ngram") === col("r.ngram") && col("l.doc_id") < col("r.doc_id"))
       .groupBy(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
       .agg(count(lit(1)).cast("int").as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
 }

@@ -17,10 +17,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streaming {
 
-  /** Run the pipeline as a streaming job over the documents parquet dir
-    * with Trigger.AvailableNow, appending deduped triples per
-    * microbatch to `outDir`. Returns the total triple count written.
-    */
   /** FileStreamSource only accepts directories; stage a single parquet
     * file into a temp dir (hard link / copy) so it can stream.
     */
@@ -35,6 +31,13 @@ object Streaming {
     }
   }
 
+  /** Run the pipeline as a streaming job over the documents parquet
+    * dir with Trigger.AvailableNow, writing each microbatch's deduped
+    * triples to `outDir/batch=<batchId>` — overwritten, not appended,
+    * so a batch replayed after a crash between its write and its
+    * commit replaces itself (the idempotent sink of the sibling
+    * streams below). Returns the total triple count written.
+    */
   def runAvailableNow(spark: SparkSession, docsPath: String,
                       checkpointDir: String, outDir: String): Long = {
     import spark.implicits._
@@ -48,10 +51,10 @@ object Streaming {
     val q = stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Doc], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Doc], batchId: Long) =>
         val triples = Pipeline.textPath(batch)
         Serialize.unionDedup(triples, triples.limit(0))
-          .write.mode("append").parquet(outDir)
+          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
         ()
       }
       .start()

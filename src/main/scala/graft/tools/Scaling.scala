@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{Bench, Pipeline}
-import graft.operators.Serialize
 import graft.sources.Corpus
 import graft.util.Det
 import org.apache.spark.sql.SparkSession
@@ -76,8 +75,7 @@ object Scaling {
     val spark = clusterSession(nExec, coresPerExec)
     import spark.implicits._
     val docs = spark.read.parquet(spansDir).as[graft.model.Doc]
-    val triples = Serialize.unionDedup(Pipeline.textPath(docs),
-      Serialize.semiTriples(Corpus.semiDocs(spark, sfDir)))
+    val triples = Pipeline.triplesOver(docs, Corpus.semiDocs(spark, sfDir))
     val nDocs = docs.count()
     var nTriples = 0L
     def job() = { nTriples = triples.count() }

@@ -127,7 +127,7 @@ class DedupSpec extends SparkSuite {
     val withTwins = Dedup.withPlantedDups(real, 5)
     val corpus = withTwins.filter($"doc_id" < 1000000L)
     val fresh = withTwins.filter($"doc_id" >= 1000000L)
-    val pairs = Dedup.incrementalPairs(corpus, fresh, 0.6).collect()
+    val pairs = Dedup.incrementalPairsIndexed(Dedup.bandedSigs(corpus), fresh, 0.6).collect()
       .map(r => (r.getString(0), r.getString(1)))
     // every planted twin is caught against its existing base
     (0L until 5L).foreach { i =>
@@ -228,7 +228,7 @@ class DedupSpec extends SparkSuite {
     val viaIndex = Dedup.incrementalPairsIndexed(
         Dedup.readIndex(spark, table), batch, 0.3)
       .collect().map(_.toString).sorted.toSeq
-    val recompute = Dedup.incrementalPairs(corpus, batch, 0.3)
+    val recompute = Dedup.incrementalPairsIndexed(Dedup.bandedSigs(corpus), batch, 0.3)
       .collect().map(_.toString).sorted.toSeq
     assert(viaIndex === recompute)
     // maintenance: append the batch's signatures; the index now equals

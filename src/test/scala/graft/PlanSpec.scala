@@ -58,21 +58,23 @@ class PlanSpec extends SparkSuite {
   }
 
   test("near-dup candidate joins are equi-joins, not all-pairs") {
-    import graft.operators.{Dedup, Similarity}
+    import graft.operators.{Dedup, Similarity, SpanDedup}
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val emb = Similarity.loadEmbeddings(spark, sf)
     for (q <- Seq(Dedup.minhashPairs(docs, 0.6), Dedup.simhashPairs(docs, 3),
+                  Dedup.incrementalPairsIndexed(Dedup.bandedSigs(docs.filter("doc_id < 400")),
+                    docs.filter("doc_id >= 400"), 0.6),
+                  SpanDedup.spanDupPairs(docs),
                   Similarity.cosineDupPairsOf(emb, 0.99))) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), p)
       assert(!p.contains("BroadcastNestedLoopJoin"), p)
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
         p.contains("BroadcastHashJoin"), p)
+      // every bucket self-join carries the hot-bucket cap (a count
+      // window over the join key) — round-2 VERDICT "What's wrong" #1
+      assert(p.contains("Window [count(1)"), p)
     }
-    // the cosine bucket self-join carries the hot-bucket cap (a count
-    // window over the join key) — round-2 VERDICT "What's wrong" #1
-    val cp = plan(Similarity.cosineDupPairsOf(emb, 0.99))
-    assert(cp.contains("Window"), cp)
   }
 
   test("LSH bucketing plan size is O(1) in tables x bits x dim (no literal hyperplanes)") {

@@ -181,7 +181,8 @@ class PropertySpec extends SparkSuite {
       val probe = ((0 until 40).map(i => (i % 7, i)) ++ Seq.fill(nHot)((0, 999)))
         .toDF("k", "v")
       val dim = (0 until 7).map(i => (i, s"d$i")).toDF("dk", "name")
-      val salted = Skew.saltedJoin(probe, dim, Seq("k"), Seq("dk"), salt, hotK = 3)
+      val salted = Skew.saltedJoin(probe, dim, Seq("k"), Seq("dk"), salt,
+          Skew.heavyHitters(probe, "k", 3).select("k"))
         .select("k", "v", "name").collect().map(_.toString).sorted.toSeq
       val plain = probe.join(dim, $"k" === $"dk")
         .select("k", "v", "name").collect().map(_.toString).sorted.toSeq

@@ -130,7 +130,8 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("cosine near-dup pairs are same-cluster only") {
-    val pairs = Similarity.cosineDupPairs(spark, tmp, 0.98, bits = 4, dim = 8)
+    val pairs = Similarity.cosineDupPairsOf(Similarity.loadEmbeddings(spark, tmp), 0.98,
+      bits = 4, dim = 8)
     val emb = spark.read.parquet(s"$tmp/embeddings.parquet")
       .select($"vec_id", $"label")
     val bad = pairs

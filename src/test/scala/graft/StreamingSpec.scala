@@ -10,20 +10,34 @@ class StreamingSpec extends SparkSuite {
   import spark.implicits._
 
   test("streaming pipeline output equals batch text-path output") {
-    val dir = java.nio.file.Files.createTempDirectory("strm").toString
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("strm")
     val sfDir = "/root/testdata/sf0.001"
-    val n = Streaming.runAvailableNow(spark, s"$sfDir/documents.parquet",
-      s"$dir/ckpt", s"$dir/out")
-    assert(n > 0)
-    val streamed = spark.read.parquet(s"$dir/out")
+    // a directory input: a file would be re-staged into a fresh temp
+    // dir per call, so a re-run would not resume the same stream
+    val in = Files.createDirectory(dir.resolve("in"))
+    Files.copy(Paths.get(s"$sfDir/documents.parquet"), in.resolve("documents.parquet"))
+    def run() = Streaming.runAvailableNow(spark, in.toString, s"$dir/ckpt", s"$dir/out")
+    def streamed() = spark.read.parquet(s"$dir/out")
       .select($"doc_id", $"subj", $"value_key")
       .collect().map(_.toString).sorted.toSeq
+    val n = run()
+    assert(n > 0)
     val docs = Pipeline.docsFor(spark, sfDir)
     val batch = graft.operators.Serialize.unionDedup(
       Pipeline.textPath(docs), Pipeline.textPath(docs).limit(0))
       .select($"doc_id", $"subj", $"value_key")
       .collect().map(_.toString).sorted.toSeq
-    assert(streamed === batch)
+    assert(streamed() === batch)
+    // crash between a batch's sink write and its commit: the replayed
+    // batch must replace its output, not add a second copy. The commit
+    // goes with its checksum sibling, as a commit never written would.
+    val commits = dir.resolve("ckpt/commits")
+    val last = commits.toFile.list().filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Files.delete(commits.resolve(last))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    assert(run() === n)
+    assert(streamed() === batch)
   }
 
   test("flatMapGroupsWithState assembles docs from spans split across batches") {
